@@ -18,18 +18,26 @@ rewriting, which is the 100 TB path.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
+
+from ..catalog import read_parquet, remember_schema
 
 
 def atomic_overwrite(df: DataFrame, table_dir: str) -> None:
     """Write df to a temp dir next to table_dir, then swap. The rename pair
-    is the commit point; a crash before it leaves the old table intact."""
+    is the commit point; a crash before it leaves the old table intact.
+
+    Records the written schema in the catalog's schema cache, so the next
+    mutation's read of table_dir skips footer inference. Spark reads every
+    written field back as nullable, hence ``asNullable``."""
     parent = os.path.dirname(os.path.abspath(table_dir))
     tmp = os.path.join(parent, f".tmp-{uuid.uuid4().hex}")
     old = os.path.join(parent, f".old-{uuid.uuid4().hex}")
@@ -39,6 +47,8 @@ def atomic_overwrite(df: DataFrame, table_dir: str) -> None:
     os.rename(tmp, table_dir)
     if os.path.exists(old):
         shutil.rmtree(old)
+    written = StructType.fromJson(json.loads(df._jdf.schema().asNullable().json()))
+    remember_schema(df.sparkSession, table_dir, written)
 
 
 def overwrite_matching(
@@ -47,7 +57,7 @@ def overwrite_matching(
     """UPDATE emulation: rows matching `updates` on key_cols are replaced by
     the update rows; everything else passes through. left_anti keeps the
     non-matching rows; the update set broadcasts (it is the small side)."""
-    current = spark.read.parquet(table_dir)
+    current = read_parquet(spark, table_dir)
     kept = current.join(F.broadcast(updates.select(*key_cols)), key_cols, "left_anti")
     atomic_overwrite(kept.unionByName(updates), table_dir)
 
@@ -59,7 +69,7 @@ def upsert_latest(
     keep row_number()=1 per key ordered by ts desc. Deterministic survivor
     even on ts ties (full column tiebreak not needed for the reference's
     single-writer semantics)."""
-    current = spark.read.parquet(table_dir)
+    current = read_parquet(spark, table_dir)
     w = Window.partitionBy(*key_cols).orderBy(F.col(ts_col).desc())
     merged = (
         current.unionByName(incoming)
@@ -79,7 +89,7 @@ def soft_delete(
 ) -> None:
     """T2 soft delete (db.mjs:296-305): matching rows get flag=false and
     status='deleted'; no row is removed. One pass, no join."""
-    current = spark.read.parquet(table_dir)
+    current = read_parquet(spark, table_dir)
     out = current.withColumn(
         flag_col, F.when(predicate, F.lit(False)).otherwise(F.col(flag_col))
     )
@@ -96,7 +106,7 @@ def conditional_update(
     """T3 conditional multi-column UPDATE (db.mjs:307-320, including the F4
     CASE WHEN retry-counter pattern): each assignment applies only where the
     predicate holds."""
-    current = spark.read.parquet(table_dir)
+    current = read_parquet(spark, table_dir)
     out = current
     for col_name, value in assignments.items():
         out = out.withColumn(
@@ -110,12 +120,19 @@ def retention_rewrite(
 ) -> int:
     """S8/Q8 TTL cleanup (db.mjs:387-408 DELETE WHERE created_at < cutoff) as
     an anti-filter rewrite. Returns rows deleted. With a date-partitioned
-    layout this only rewrites (drops) expiring partitions."""
-    current = spark.read.parquet(table_dir)
-    survivors = current.filter(F.col(ts_col) >= cutoff)
-    before, after = current.count(), survivors.count()
+    layout this only rewrites (drops) expiring partitions.
+
+    The deleted rows are counted by an observation in the rewrite's own
+    scan, ahead of the filter: no extra pass over the table."""
+    keep = F.col(ts_col) >= cutoff
+    deleted = Observation()
+    survivors = (
+        read_parquet(spark, table_dir)
+        .observe(deleted, F.count_if(~F.coalesce(keep, F.lit(False))).alias("n"))
+        .filter(keep)
+    )
     atomic_overwrite(survivors, table_dir)
-    return before - after
+    return deleted.get["n"]
 
 
 def snapshot(spark: SparkSession, table_dir: str, snapshot_dir: str) -> None:
@@ -129,7 +146,7 @@ def compact(spark: SparkSession, table_dir: str, target_files: int = 1) -> None:
     """T5 VACUUM analog: rewrite into target_files files (small-file
     compaction). ANALYZE's statistics role is played by parquet footers +
     Catalyst CBO stats on managed tables."""
-    current = spark.read.parquet(table_dir)
+    current = read_parquet(spark, table_dir)
     atomic_overwrite(current.coalesce(target_files), table_dir)
 
 
@@ -139,7 +156,7 @@ def evolve_schema(
     """T6 versioned migration (db.mjs:121-167 probe-before-alter ADD COLUMN):
     add each column that does not already exist, with its default value
     expression. Idempotent — existing columns are left untouched."""
-    current = spark.read.parquet(table_dir)
+    current = read_parquet(spark, table_dir)
     out = current
     for col_name, default in new_columns.items():
         if col_name not in current.columns:

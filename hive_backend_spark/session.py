@@ -55,6 +55,18 @@ DEFAULT_CONFS = {
     # checkpoint at the 32x scale point. 4 GiB is comfortable inside the
     # 8 GiB driver heap and changes nothing else.
     "spark.driver.maxResultSize": "4g",
+    # Compiled whole-stage classes, keyed by generated source. Spark's
+    # default of 100 is below a warehouse_mix pass's working set (~300
+    # classes; 284 recompiles per pass at 100), so every pass paid ~2.6 s
+    # of Janino time. At 2048 a steady pass compiles 20-24: two mutation
+    # ops inline per-pass literals, and q79 compiles 4-8. With no bound
+    # the whole tier-1 suite
+    # compiles 3611 distinct classes, 1425 of them in its largest module
+    # (test_oracle_parity). 2048 holds that module and ~7 passes' worth, at
+    # <= ~38 KB of metaspace per class (~75 MB full). Static conf: it is
+    # read once per JVM, so ensure_runtime_confs cannot apply it to a
+    # session built outside get_spark; such sessions keep Spark's 100.
+    "spark.sql.codegen.cache.maxEntries": "2048",
 }
 
 

@@ -122,7 +122,11 @@ def write_partitioned(df: DataFrame, table_dir: str, partition_cols: list[str]) 
 
 def read_partitioned(spark: SparkSession, table_dir: str) -> DataFrame:
     """Read back a partitioned table; partition columns come from the
-    directory layout and equality filters on them prune at planning time."""
+    directory layout and equality filters on them prune at planning time.
+
+    Plain inference on purpose, not ``catalog.read_parquet``: its cache key
+    is a non-recursive listing, which cannot see files appended under an
+    existing partition directory."""
     return spark.read.parquet(table_dir)
 
 

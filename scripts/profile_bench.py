@@ -4,6 +4,11 @@
 For each headline bench query (or a subset given as argv names), runs the
 same noop-sink timing as bench.py but additionally records:
   - number of Spark jobs the query schedules (statusTracker job-group delta)
+  - Janino compiles (CodegenMetrics compilation-count delta): ``compiles``
+    for the last attempt, ``compiles_first`` for the first
+  - schema-inference jobs: the group's jobs that ran outside any SQL
+    execution, i.e. schema-less ``spark.read`` footer inference (an RDD
+    action in a query would count too)
   - plan shape: counts of Exchange / BroadcastExchange / *EvalPython /
     WholeStageCodegen spans in explain("formatted")
   - the full explain("formatted") text, written to
@@ -41,6 +46,18 @@ def plan_stats(plan: str) -> dict:
         "bhj": len(re.findall(r"\bBroadcastHashJoin\b", plan)),
         "sorts": len(re.findall(r"\bSort\b", plan)),
         "codegen_spans": len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))),
+    }
+
+
+def sql_job_ids(spark) -> set[int]:
+    """Ids of every job that ran inside a SQL execution so far."""
+    jvm = spark._jvm
+    as_java = jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    store = spark._jsparkSession.sharedState().statusStore()
+    return {
+        int(j)
+        for e in as_java(store.executionsList())
+        for j in as_java(e.jobs().keySet())
     }
 
 
@@ -91,23 +108,29 @@ def main() -> None:
         )
         os.makedirs(plans_dir, exist_ok=True)
 
+    compile_count = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     rows = []
     for name in names:
         reset = COLD_RESET.get(name)
         samples = []
+        compiles = []
         jobs_last = 0
         for attempt in range(attempts if reset is None else max(attempts, 3)):
             if reset is not None:
                 reset()
             group = f"prof-{name}-{attempt}"
             sc.setJobGroup(group, name)
+            c0 = compile_count.getCount()
             t0 = time.perf_counter()
             df = specs[name].fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             sc.setJobGroup(None, None)
             samples.append(dt)
-            jobs_last = len(sc.statusTracker().getJobIdsForGroup(group))
+            compiles.append(compile_count.getCount() - c0)
+            job_ids = set(sc.statusTracker().getJobIdsForGroup(group))
+            jobs_last = len(job_ids)
+            inference_last = len(job_ids - sql_job_ids(spark))
         df = specs[name].fn(spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -121,6 +144,9 @@ def main() -> None:
             "best_s": round(min(samples), 4),
             "samples": [round(s, 3) for s in samples],
             "jobs": jobs_last,
+            "compiles": compiles[-1],
+            "compiles_first": compiles[0],
+            "inference_jobs": inference_last,
             **stats,
         }
         rows.append(row)
@@ -128,7 +154,10 @@ def main() -> None:
 
     total = round(sum(r["best_s"] for r in rows), 3)
     print(json.dumps({"summary": True, "n": len(rows), "total_best_s": total,
-                      "total_jobs": sum(r["jobs"] for r in rows)}), flush=True)
+                      "total_jobs": sum(r["jobs"] for r in rows),
+                      "total_compiles": sum(r["compiles"] for r in rows),
+                      "total_inference_jobs": sum(r["inference_jobs"] for r in rows)}),
+          flush=True)
     spark.stop()
 
 
