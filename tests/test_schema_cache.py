@@ -9,7 +9,6 @@ a batch of registered queries, or every repeat recompiles it."""
 
 from __future__ import annotations
 
-import os
 import uuid
 
 import pyarrow as pa
@@ -29,13 +28,6 @@ from hive_backend_spark.catalog import (
 from hive_backend_spark.operators import mutation as MU
 from hive_backend_spark.registry import all_queries
 
-# the sf0.001 fixture tables the repository keeps for its benchmark
-SF_DIR = os.environ.get(
-    "SPARK_GRAFT_TEST_SF_DIR",
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "data", "sf0.001"),
-)
-
-
 def _jobs(spark, fn):
     """(fn(), number of Spark jobs fn scheduled)."""
     sc = spark.sparkContext
@@ -49,8 +41,8 @@ def _jobs(spark, fn):
 
 
 @pytest.mark.parametrize("name", TABLES)
-def test_cached_schema_equals_inferred(spark, name):
-    path = table_path(SF_DIR, name)
+def test_cached_schema_equals_inferred(spark, sf_dir, name):
+    path = table_path(sf_dir, name)
     clear_schema_cache()
     cold, cold_jobs = _jobs(spark, lambda: read_parquet(spark, path))
     warm, warm_jobs = _jobs(spark, lambda: read_parquet(spark, path))
@@ -58,21 +50,21 @@ def test_cached_schema_equals_inferred(spark, name):
     assert cold.schema == warm.schema == spark.read.parquet(path).schema
 
 
-def test_warm_load_table_schedules_no_jobs(spark):
+def test_warm_load_table_schedules_no_jobs(spark, sf_dir):
     clear_schema_cache()
-    cold, cold_jobs = _jobs(spark, lambda: load_table(spark, SF_DIR, "events"))
-    warm, warm_jobs = _jobs(spark, lambda: load_table(spark, SF_DIR, "events"))
+    cold, cold_jobs = _jobs(spark, lambda: load_table(spark, sf_dir, "events"))
+    warm, warm_jobs = _jobs(spark, lambda: load_table(spark, sf_dir, "events"))
     assert (cold_jobs, warm_jobs) == (1, 0)
     assert warm.schema == cold.schema
     # the nanos -> timestamp conversion still applies on a hit
     assert dict(warm.dtypes)["ts"] == "timestamp"
 
 
-def test_mutations_keep_the_cache_current(spark, tmp_path):
+def test_mutations_keep_the_cache_current(spark, sf_dir, tmp_path):
     """Each op records what it wrote, so the next read is a hit that
     already shows the op's schema, the same one inference finds."""
     d = str(tmp_path / "t")
-    load_table(spark, SF_DIR, "events").select(
+    load_table(spark, sf_dir, "events").select(
         F.col("user_id").alias("id"),
         F.col("ts"),
         F.lit(True).alias("active"),
@@ -118,15 +110,9 @@ def test_retention_rewrite_counts_deletions_in_one_scan(spark, tmp_path):
     assert MU.retention_rewrite(spark, d, "ts", cutoff) == 0
 
 
-# An absolute path is fingerprinted with os.scandir; a relative one goes
-# through the Hadoop FileSystem listing (the JVM and this process share a
-# working directory).
-@pytest.mark.parametrize("relative", [False, True], ids=["local", "hadoop"])
-def test_replaced_single_file_is_reinferred(spark, tmp_path, relative):
+def test_replaced_single_file_is_reinferred(spark, tmp_path):
     path = str(tmp_path / "one.parquet")
     pq.write_table(pa.table({"a": [1, 2]}), path)
-    if relative:
-        path = os.path.relpath(path)
     _, cold = _jobs(spark, lambda: read_parquet(spark, path))
     df, warm = _jobs(spark, lambda: read_parquet(spark, path))
     assert (cold, warm) == (1, 0)
@@ -151,6 +137,17 @@ def test_partitioned_layouts_are_not_cached(spark, tmp_path):
         "p"
     ).parquet(d)
     assert read_parquet(spark, d).count() == SRC.read_partitioned(spark, d).count() == 2
+
+
+def test_long_listings_are_not_cached(spark, tmp_path):
+    """Past _MAX_LISTING entries the per-read listing would cost more
+    py4j calls than it saves, so such a path is always inferred."""
+    d = str(tmp_path / "many")
+    spark.range(0, 70, 1, 70).write.parquet(d)  # 70 parts and _SUCCESS
+    _, jobs = _jobs(spark, lambda: read_parquet(spark, d))
+    df, again = _jobs(spark, lambda: read_parquet(spark, d))
+    assert again == jobs > 0
+    assert df.count() == 70
 
 
 def test_missing_path_still_raises(spark, tmp_path):
