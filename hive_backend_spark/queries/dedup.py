@@ -89,7 +89,7 @@ def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Cluster labels are the second materialization point of the pipeline: the
-# iterative connected-components pass runs once per (session, corpus) and its
+# connected-components pass runs once per (session, corpus) and its
 # (node, label) table — tiny, |clustered docs| rows — is reused by every
 # consumer (cluster listing q79, canonical selection q90/q112), exactly as a
 # production pipeline persists its cluster assignment table. Same
@@ -104,11 +104,12 @@ def _cluster_labels_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC contracts the distinct-text graph (byte-identical docs are
     definitionally one node), then membership expands labels back to
     documents. A boilerplate flood of K copies is ONE node here instead of
-    a K-clique — the iterative stage's edge count is bounded by distinct
-    texts. Multi-member fingerprints with a band identity but no
-    cross-fingerprint edge are their own components (their docs are mutual
-    exact duplicates); empty-shingle texts have NULL bands and never
-    cluster.
+    a K-clique — the labelling pass's edge count is bounded by distinct
+    texts, which keeps it under ``D.LOCAL_CC_MAX_EDGES`` and on the
+    one-job union-find path at the tested scales. Multi-member
+    fingerprints with a band identity but no cross-fingerprint edge are
+    their own components (their docs are mutual exact duplicates);
+    empty-shingle texts have NULL bands and never cluster.
 
     cluster_size rides the SAME aggregate that computes the label (one
     groupBy(ckey) producing min(doc_id) and count — a doc belongs to

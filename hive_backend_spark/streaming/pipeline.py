@@ -5,9 +5,9 @@ Reference semantics reproduced (sites cited per row of SURVEY §2.9):
   Q3        bounded prioritized consume    -> per-micro-batch top-k in
             ``run_two_phase`` (per-batch ordering IS the reference contract:
             the reference orders within one poll's LIMIT, db.mjs:289-290)
-  Q4/Q5     two-phase completion,          -> batch_id-partitioned dynamic
-            at-least-once redelivery          overwrite of the processed
-                                              batch (replay-idempotent sink)
+  Q4/Q5     two-phase completion,          -> overwrite of the processed
+            at-least-once redelivery          batch's own batch_id partition
+                                              (replay-idempotent sink)
   Q6        dedup on unique id             -> ``dedup_stream``
             (dropDuplicatesWithinWatermark)
   Q7        heartbeat staleness            -> ``stale_users_stream``
@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -176,6 +176,16 @@ def stale_users_stream(events: DataFrame, timeout_ms: int | None = None) -> Data
     )
 
 
+def _batch_dir(table_dir: str, batch_id: int) -> str:
+    """The ``batch_id=N`` partition directory of a per-batch sink table.
+    A sink writes its rows there with mode overwrite: a replay replaces only
+    its own batch, and readers of ``table_dir`` see ``batch_id`` as a
+    partition column. The id stays out of the plan on purpose: an integer
+    literal is inlined into the generated code, so a ``lit(batch_id)``
+    column compiles new classes on every trigger."""
+    return os.path.join(table_dir, f"batch_id={batch_id}")
+
+
 def run_two_phase(
     spark: SparkSession,
     source_dir: str,
@@ -184,14 +194,14 @@ def run_two_phase(
     batch_size: int = 100,
 ) -> None:
     """Q3+Q4+Q5 end to end: stream -> route -> per-micro-batch prioritized
-    top-k -> write the processed batch (processed=true, batch_id-stamped)
-    to parquet. Runs with availableNow and blocks until the backlog drains.
+    top-k -> write the processed batch (processed=true) to its batch_id
+    partition. Runs with availableNow and blocks until the backlog drains.
 
     Sink idempotence: foreachBatch is at-least-once — a crash between the
     sink write and the checkpoint commit replays that batch on restart. A
     plain append would duplicate the replayed batch's rows, so each batch
-    writes its own batch_id partition with dynamic partition overwrite
-    (the drift-monitor sink's pattern): a replay overwrites ONLY its own
+    overwrites its own batch_id partition directory (``_batch_dir``, the
+    drift-monitor sink's pattern): a replay overwrites ONLY its own
     partition, leaving every other batch intact — exactly-once per
     batch_id in the TABLE without a transactional format. The CONSUMER
     contract stays at-least-once like the reference (a consumer may have
@@ -207,14 +217,8 @@ def run_two_phase(
             )
             .limit(batch_size)
             .withColumn("processed", F.lit(True))
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        (
-            picked.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(processed_dir)
-        )
+        picked.write.mode("overwrite").parquet(_batch_dir(processed_dir, batch_id))
 
     stream = route_events(read_event_stream(spark, source_dir))
     q = (
@@ -390,20 +394,14 @@ def drift_monitor_stream(
     Restart idempotence: foreachBatch is at-least-once — a failure
     between the sink write and the checkpoint commit replays the batch
     on restart. A plain append would duplicate that batch's verdict
-    rows, so each batch writes to its own batch_id partition with
-    dynamic partition overwrite: the replay overwrites ONLY its own
+    rows, so each batch overwrites its own batch_id partition directory
+    (``_batch_dir``): the replay overwrites ONLY its own
     partition, leaving every other batch's verdicts intact — exactly-
     once per batch_id without a transactional table format."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_value_drift(batch_df, reference).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(monitor_dir)
+        batch_value_drift(batch_df, reference).write.mode("overwrite").parquet(
+            _batch_dir(monitor_dir, batch_id)
         )
 
     stream = read_event_stream(spark, source_dir, max_files_per_trigger)
@@ -675,41 +673,49 @@ class VersionedStateTable:
         those). `touched` is bounded by construction at every call site
         (priority codomain, 16 hex term buckets).
 
-        Round 12: ONE dynamic-partition write job replaces the former
-        loop of one write job per touched partition — the loop was the
-        dominant fixed cost of every stateful trigger (up to 17 jobs,
-        each re-evaluating the merged frame). partitionBy lays out
-        exactly the `{part}=tok/state_version=N` directories the per-part
-        writer produced; repartition by the part column gives one output
-        file per bucket (the r11 writer's many-files-per-dir inflated
-        later triggers' list+open cost)."""
+        ONE write job lays out every touched partition: partitionBy writes
+        `{part}=tok/` directories into ``root/_staging-N`` (the `_` prefix
+        hides it from ``versions``), and each is then renamed through the
+        Hadoop FS to `{part}=tok/state_version=N`. The version lives only in
+        the directory name, never in the plan — a `lit(batch_id)` column
+        is inlined into generated code and recompiled on every trigger.
+        Repartition by the part column gives one output file per bucket.
+        A replay of batch N deletes whatever a crashed attempt left at
+        version N (and its staging directory) before writing again."""
+        fs, Path = _state_fs(self.spark, self.root)
+        staging = Path(self.root, f"_staging-{batch_id}")
         (
             df.filter(part_col.isin(*sorted(touched)))
             .withColumn(self.part_key, part_col)
-            .withColumn("state_version", F.lit(batch_id))
             .repartition(F.col(self.part_key))
             .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(self.part_key, "state_version")
-            .parquet(self.root)
+            .partitionBy(self.part_key)
+            .parquet(staging.toString())
         )
-        # dynamic partitionBy writes nothing for a touched partition whose
-        # new state is EMPTY — but that empty state must still supersede
-        # the previous version (a drained bucket that kept its old rows
-        # would re-serve them; caught by the restart-idempotence test).
-        # The sentinel is a zero-byte `_EMPTY` OBJECT inside the version
-        # dir, not a bare mkdirs: on S3A an empty-directory marker is not
-        # durable once sibling objects churn (the prefix can vanish and
-        # the drained bucket would re-serve its stale prior version), while
-        # a real object persists. Spark's file listing skips `_`-prefixed
-        # names, so the dir still reads back as an empty frame under the
-        # declared schema, exactly like the per-part writer's empty write.
-        fs, Path = _state_fs(self.spark, self.root)
         for part in sorted(touched):
             d = Path(self._part_dir(part, batch_id))
-            if not fs.exists(d):
-                fs.mkdirs(d)
-                fs.create(Path(d, "_EMPTY"), True).close()
+            if fs.exists(d):
+                fs.delete(d, True)
+            staged = Path(staging, f"{self.part_key}={part}")
+            if fs.exists(staged):
+                fs.mkdirs(d.getParent())
+                if not fs.rename(staged, d):
+                    raise OSError(f"could not move {staged.toString()} to {d.toString()}")
+                continue
+            # partitionBy writes nothing for a touched partition whose
+            # new state is EMPTY — but that empty state must still supersede
+            # the previous version (a drained bucket that kept its old rows
+            # would re-serve them; caught by the restart-idempotence test).
+            # The sentinel is a zero-byte `_EMPTY` OBJECT inside the version
+            # dir, not a bare mkdirs: on S3A an empty-directory marker is not
+            # durable once sibling objects churn (the prefix can vanish and
+            # the drained bucket would re-serve its stale prior version), while
+            # a real object persists. Spark's file listing skips `_`-prefixed
+            # names, so the dir still reads back as an empty frame under the
+            # declared schema, exactly like the per-part writer's empty write.
+            fs.mkdirs(d)
+            fs.create(Path(d, "_EMPTY"), True).close()
+        fs.delete(staging, True)
 
     def prune(self, batch_id: int) -> None:
         """Per partition: a replay of batch N needs only the newest
@@ -757,10 +763,11 @@ def run_prioritized_carryover(
     per-partition top-k + k-row merge, never a global sort or a
     single-task state funnel — serves it to the processed table's batch_id
     partition, and rewrites ONLY the bands the trigger touched (bands with
-    arrivals or served rows). An untouched band's state files are not
-    rewritten at all — per-trigger write cost is O(touched backlog), not
-    O(total backlog), which is what lets a deep low-priority backlog sit
-    cheaply while the hot band churns.
+    arrivals or served rows, observed on the pick job itself). An
+    untouched band's state files are not rewritten at all — per-trigger
+    write cost is O(touched backlog), not O(total backlog), which is what
+    lets a deep low-priority backlog sit cheaply while the hot band
+    churns.
 
     Restart idempotence: a replay of batch N re-reads each band's latest
     version < N (pruning keeps it: per band, the newest version <= N-1
@@ -778,7 +785,13 @@ def run_prioritized_carryover(
         sess = arrivals.sparkSession
         state = VersionedStateTable(sess, pending_dir, ROUTED_SCHEMA, "band")
         carry = state.read_latest(before_batch=batch_id)
-        avail = arrivals.unionByName(carry)
+        # touched = bands with new arrivals (state grows) or served rows
+        # (state shrinks), a |bands|-bounded set (priority codomain),
+        # observed on the pick job rather than by two more jobs
+        arrived, served = Observation(), Observation()
+        avail = arrivals.observe(
+            arrived, F.collect_set(band_of).alias("bands")
+        ).unionByName(carry)
         # (priority, created_at, id) is a TOTAL order (id unique), so the
         # served set is deterministic — a replay picks the same rows
         picked = (
@@ -788,27 +801,15 @@ def run_prioritized_carryover(
                 F.col("id").asc(),
             )
             .limit(batch_size)
+            .observe(served, F.collect_set(band_of).alias("bands"))
             .localCheckpoint()  # k rows, pinned so serve and remainder agree
         )
-        # touched = bands with new arrivals (state grows) or served rows
-        # (state shrinks) — a |bands|-bounded collect (priority codomain)
-        touched = {
-            r["b"]
-            for r in arrivals.select(band_of.alias("b")).distinct().collect()
-        } | {
-            r["b"]
-            for r in picked.select(band_of.alias("b")).distinct().collect()
-        }
+        touched = set(arrived.get["bands"]) | set(served.get["bands"])
         rest = avail.join(picked.select("id"), "id", "left_anti").select(
             *[f.name for f in ROUTED_SCHEMA.fields]
         )
-        (
-            picked.withColumn("processed", F.lit(True))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(processed_dir)
+        picked.withColumn("processed", F.lit(True)).write.mode("overwrite").parquet(
+            _batch_dir(processed_dir, batch_id)
         )
         state.overwrite_parts(rest, band_of, touched, batch_id)
         state.prune(batch_id)
@@ -1076,7 +1077,7 @@ def run_near_dup_admission(
 
     Restart idempotence is the state table's contract (replay reads each
     bucket's newest version < N, rewrites exactly its own outputs;
-    decisions_dir overwrites its own batch_id partition dynamically) —
+    decisions_dir overwrites its own batch_id partition directory) —
     pinned by the crash-replay test, same rigor as the incremental index."""
     from ..operators import dedup as D
 
@@ -1176,15 +1177,9 @@ def run_near_dup_admission(
                 admitted_fps.add(fp)
                 admitted_buckets.update(doc_bands.get(did, ()))
                 rows.append((did, fp, True, "admitted"))
-        decisions = sess.createDataFrame(
+        sess.createDataFrame(
             rows, "doc_id bigint, fp string, admitted boolean, reason string"
-        ).withColumn("batch_id", F.lit(batch_id))
-        (
-            decisions.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(decisions_dir)
-        )
+        ).write.mode("overwrite").parquet(_batch_dir(decisions_dir, batch_id))
         admitted_ids = {did for did, _, adm, _ in rows if adm}
         new_index_rows = [
             (r["fp"], r["band_idx"], r["band_sig"], r["sbucket"])

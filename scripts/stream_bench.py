@@ -145,8 +145,7 @@ def bench_carryover(spark, root: str) -> dict:
     for t in range(N_TRIGGERS):
         _stage_one(chunks[t], stage, src, f"batch_{t}.parquet")
         if os.path.isdir(pending):
-            st = S.VersionedStateTable(spark, pending, S.ROUTED_SCHEMA, "band")
-            backlog_rows.append(st.read_latest(before_batch=10**9).count())
+            backlog_rows.append(S.read_pending_state(spark, pending).count())
         else:
             backlog_rows.append(0)
         t0 = time.perf_counter()

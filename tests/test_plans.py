@@ -901,6 +901,29 @@ def test_lsh_pair_expansion_materialized_once(spark, sf_dir):
         QD.clear_bands_cache()
 
 
+
+def test_cold_clusters_after_warm_candidates_bounded_jobs(spark, sf_dir):
+    """Cold q79 with its signature and candidate tables warm is the
+    labelling pass alone, and a near-dup graph of this size takes the
+    single-worker union-find path: at most 16 Spark jobs (the distributed
+    star contraction's rounds took 25)."""
+    import uuid
+
+    from hive_backend_spark.queries.dedup import clear_labels_cache
+
+    specs = all_queries()
+    specs["q67_lsh_candidates"].fn(spark, sf_dir).collect()
+    clear_labels_cache()
+    sc = spark.sparkContext
+    group = f"cold-q79-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        specs["q79_dup_clusters"].fn(spark, sf_dir).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 16, jobs
+
 def test_round8_additions_plan_shapes(spark, sf_dir):
     """Plan pins for the round-8 queries (q264-q270).
 

@@ -69,6 +69,17 @@ def _union_find_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {n: roots[find(n)] for n in parent}
 
 
+def _labels_on_both_paths(df, **kw) -> dict[str, set]:
+    """{path: {(node, label)}} from the union-find pass (the default bound)
+    and from the star contraction (bound 0)."""
+    out = {}
+    for path, bound in (("union_find", D.LOCAL_CC_MAX_EDGES), ("star", 0)):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(D, "LOCAL_CC_MAX_EDGES", bound)
+            out[path] = {tuple(r) for r in D.connected_components(df, **kw).collect()}
+    return out
+
+
 @settings(**_SETTINGS)
 @given(
     edges=st.lists(
@@ -78,27 +89,37 @@ def _union_find_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     )
 )
 def test_connected_components_matches_union_find(spark, edges):
-    """The large-star/small-star contraction must agree with union-find on
-    arbitrary graphs: chains, cliques, self-loops, duplicate and reversed
-    edges. max_iter=12 is far under the worst-case DIAMETER (41 nodes) that
-    the retired min-label propagation needed — the star contraction's
-    O(log n) round bound is what makes this budget safe."""
+    """Both labelling paths must agree with union-find on arbitrary graphs:
+    chains, cliques, self-loops, duplicate and reversed edges. Every graph
+    goes through the single-worker union-find pass (the default bound) and
+    through the large-star/small-star contraction (bound 0). max_iter=12 is
+    far under the worst-case DIAMETER (41 nodes) that the retired min-label
+    propagation needed — the star contraction's O(log n) round bound is
+    what makes this budget safe."""
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        (r["node"], r["label"])
-        for r in D.connected_components(df, max_iter=12).collect()
-    }
     want = set(_union_find_components(edges).items())
-    assert got == want
+    assert _labels_on_both_paths(df, max_iter=12) == {"union_find": want, "star": want}
 
 
-def test_connected_components_raises_without_convergence(spark):
+def test_connected_components_raises_without_convergence(spark, monkeypatch):
     """A long chain must raise (not silently return partial labels) when
-    max_iter is below the propagation rounds it needs."""
+    max_iter is below the star contraction's rounds. The chain is far under
+    the union-find bound, so the bound is set to 0 to force the star
+    contraction — the only path with a round budget."""
+    monkeypatch.setattr(D, "LOCAL_CC_MAX_EDGES", 0)
     chain = [(i, i + 1) for i in range(30)]
     df = spark.createDataFrame(chain, "src long, dst long")
     with pytest.raises(RuntimeError, match="did not converge"):
         D.connected_components(df, max_iter=2)
+
+
+def test_connected_components_null_endpoint_same_on_both_paths(spark):
+    """An edge with a NULL endpoint contributes its other endpoint as a
+    node and one (NULL, NULL) row; the union-find path must return what
+    the star contraction's outer join returns."""
+    df = spark.createDataFrame([(1, 2), (3, None), (None, None)], "src long, dst long")
+    want = {(1, 1), (2, 1), (3, 3), (None, None)}
+    assert _labels_on_both_paths(df) == {"union_find": want, "star": want}
 
 
 # --- minhash band digests: column form vs Arrow UDF form -------------------

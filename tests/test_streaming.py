@@ -944,6 +944,37 @@ def test_carryover_untouched_band_not_rewritten(spark, tmp_path):
     assert got == views | (clicks - served)
 
 
+
+def test_carryover_steady_trigger_compiles_nothing(spark, tmp_path):
+    """A steady carryover trigger reuses the classes earlier triggers
+    compiled: no plan of the sink may carry the batch id, since an integer
+    literal is inlined into generated code and every new value compiles
+    new classes. One file per call is one trigger; the third is timed."""
+    import datetime
+    import glob
+
+    src = tmp_path / "src"
+    src.mkdir()
+    t0 = datetime.datetime(2020, 1, 1)
+    processed, pending, ckpt = (str(tmp_path / d) for d in ("processed", "pending", "ckpt"))
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    per_trigger = []
+    for batch in range(3):
+        rows = [
+            (e, t0 + datetime.timedelta(seconds=e), e, "click" if e % 4 == 0 else "view", "{}")
+            for e in range(batch * 20, batch * 20 + 20)
+        ]
+        spark.createDataFrame(
+            rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, props string"
+        ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage"))
+        part = glob.glob(str(tmp_path / "stage" / "part-*.parquet"))[0]
+        shutil.move(part, str(src / f"batch_{batch}.parquet"))
+        c0 = compiles.getCount()
+        S.run_prioritized_carryover(spark, src.as_posix(), processed, pending, ckpt, batch_size=8)
+        per_trigger.append(compiles.getCount() - c0)
+    assert per_trigger[2] == 0, per_trigger
+    assert spark.read.parquet(processed).count() == 24
+
 def test_batch_type_chi2_kernel(spark, stream_src):
     """Categorical drift kernel: self-comparison scores ~0 and calm; a
     composition change (one type removed from current) alarms; an empty
